@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Vec
 import graft.rag.Search
+import graft.sources.Artifact
 
 /** IVF approximate-nearest-neighbor search (SURVEY.md §2.D2) — the scale
   * path beyond brute force (D1 in [[graft.rag.Search]]).
@@ -141,21 +142,17 @@ object Ann {
     * also counts the probe rows — the collect stays ≤ nlists rows and a
     * caller violating fixed-Q gets the family's documented throw, never
     * an unbounded driver collect. */
-  /** [[probedListIds]] memoized per (corpus path, data signature, dials) —
-    * r18, the indexStatCache / a13z probedListsCache rule: the probed-list
-    * set is deterministic per (corpus, nlists, nprobe, qmod), lands in the
-    * plan as literal `IN` values, and was the last per-serve driver-side
-    * JOB the a22/a2-pruned chains still paid (a rollup + collect over the
-    * probe subtree, every run). The srcSignature key keeps the staleness
-    * contract: an in-place corpus regeneration recomputes. Fingerprint-
-    * neutral by construction — the memo feeds the SAME sorted literals
-    * into the SAME plan. */
-  private val probedIdsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
+  /** [[probedListIds]] as an [[Artifact.memo]] per (corpus, data
+    * signature, dials): the probed-list set is deterministic per (corpus,
+    * nlists, nprobe, qmod), lands in the plan as literal `IN` values, and
+    * was the last per-serve driver-side JOB the a22/a2-pruned chains still
+    * paid (a rollup + collect over the probe subtree, every run). An
+    * in-place corpus regeneration recomputes. Fingerprint-neutral by
+    * construction — the memo feeds the SAME sorted literals into the SAME
+    * plan. */
   private[ann] def probedListIdsCached(spark: SparkSession, dir: String,
       nprobe: Int, nlists: Int, qmod: Int): Seq[Long] =
-    probedIdsCache.getOrElseUpdate(
-      s"${graft.sources.Warehouse.tableSuffix(dir)}@${Pq.srcSignature(dir)}:$nlists:$nprobe:$qmod",
+    Artifact.memo(s"probedids:$nlists:$nprobe:$qmod", dir, "embeddings.parquet")(
       probedListIds(Search.corpus(spark, dir), nprobe, nlists, qmod))
 
   private[ann] def probedListIds(e: DataFrame, nprobe: Int, nlists: Int,
@@ -190,19 +187,10 @@ object Ann {
   }
 
   private[ann] def ivfListTable(spark: SparkSession, dir: String,
-                                nlists: Int): DataFrame = {
-    val e = Search.corpus(spark, dir)
-    val sig = java.security.MessageDigest.getInstance("MD5")
-      .digest(Pq.srcSignature(dir).getBytes("UTF-8"))
-      .take(4).map(b => f"$b%02x").mkString
-    val t = s"graft_ivf${nlists}_${graft.sources.Warehouse.tableSuffix(dir)}_$sig"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writePartitionedTable(
-          listAssignment(e, nlists = nlists), t, "list_id")
-    }
-    spark.table(t)
-  }
+                                nlists: Int): DataFrame =
+    Artifact.table(spark, s"ivf$nlists", dir, "embeddings.parquet")(
+      Artifact.Partitioned("list_id"))(
+      listAssignment(Search.corpus(spark, dir), nlists = nlists))
 
   /** The probe set: each query's top-NPROBE centroids by rounded cosine.
     * Returns (query_id, list_id, qlabel, qv, qnrm).
@@ -353,19 +341,17 @@ object Ann {
     math.max(8, math.min(65536L, math.ceil(math.sqrt(corpusCount.toDouble)).toLong)).toInt
   }
 
-  /** Index-statistic memo (r17 optimization round, guide §1.2 step 1 —
-    * remove repeated passes): occupancy and splinter are properties of the
-    * BUILD artifact (FAISS stores per-list sizes with the inverted lists;
-    * the centroid set is versioned with the index), yet every router/auto
-    * serve re-ran their aggregate jobs — a21_route alone fired 26 Spark
-    * jobs per warm run (graft.Profile), almost all of them these stat
-    * passes. Memoized per (corpus path, data signature, dial) exactly like
-    * the index tables themselves: the first use in a session pays the
-    * distributed pass (Bench reports it under `cold`), steady-state serves
-    * read index metadata. The srcSignature key means an in-place corpus
-    * regeneration recomputes (the RouterDimSpec staleness rule). */
-  private val indexStatCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  /* Index-statistic memos (r17 optimization round, guide §1.2 step 1 —
+   * remove repeated passes): occupancy and splinter are properties of the
+   * BUILD artifact (FAISS stores per-list sizes with the inverted lists;
+   * the centroid set is versioned with the index), yet every router/auto
+   * serve re-ran their aggregate jobs — a21_route alone fired 26 Spark
+   * jobs per warm run (graft.Profile), almost all of them these stat
+   * passes. Both are [[Artifact.memo]]s keyed like the index tables
+   * themselves: the first use in a session pays the distributed pass
+   * (Bench reports it under `cold`), steady-state serves read index
+   * metadata, an in-place corpus regeneration recomputes (the
+   * RouterDimSpec staleness rule). */
 
   /** Occupancy statistic for the rerank law: the MAX inverted-list size of
     * the built IVF index at `nlists` — one partial-agg pass over the
@@ -376,10 +362,9 @@ object Ann {
     * cluster across ~nlists/clusters lists, so max-list-size UNDER-states
     * true cluster occupancy — [[annOperatingPoint]] folds in a 2x safety
     * factor for exactly that bias. Memoized with the artifact it
-    * describes ([[indexStatCache]]). */
+    * describes. */
   def occupancyEstimate(spark: SparkSession, dir: String, nlists: Int): Long =
-    indexStatCache.getOrElseUpdate(
-      s"occ:${graft.sources.Warehouse.tableSuffix(dir)}:${Pq.srcSignature(dir)}:$nlists",
+    Artifact.memo(s"occ:$nlists", dir, "embeddings.parquet")(
       ivfListTable(spark, dir, nlists)
         .groupBy("list_id").agg(count(lit(1)).as("sz"))
         .agg(max(col("sz"))).collect()(0).getLong(0))
@@ -406,11 +391,9 @@ object Ann {
     * leaving nprobe at the measured small constant. */
   def splinterEstimate(spark: SparkSession, dir: String, nlists: Int,
                        tau: Double = 0.5): Int =
-    // memoized per (corpus, signature, dial) — centroid-set metadata, same
-    // staleness key as the index tables ([[indexStatCache]] scaladoc)
-    indexStatCache.getOrElseUpdate(
-      s"spl:${graft.sources.Warehouse.tableSuffix(dir)}:${Pq.srcSignature(dir)}:$nlists:$tau",
-      splinterOf(Search.corpus(spark, dir), nlists, tau).toLong).toInt
+    // centroid-set metadata, memoized like the index tables
+    Artifact.memo(s"spl:$nlists:$tau", dir, "embeddings.parquet")(
+      splinterOf(Search.corpus(spark, dir), nlists, tau))
 
   /** [[splinterEstimate]] over an explicit centroid-source frame — the
     * streamed-append composition derives centroids from the VERSIONED

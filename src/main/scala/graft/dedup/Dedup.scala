@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{DetHash, Exact, Vec}
-import graft.sources.Warehouse
+import graft.sources.Artifact
 
 /** Deduplication suite (SURVEY.md §2.C) — the LLM-training-data pipeline
   * operators, each expressed as blocked (never all-pairs) Spark plans.
@@ -21,14 +21,14 @@ import graft.sources.Warehouse
   */
 object Dedup {
 
-  /** documents.parquet data-signature suffix for every dedup artifact
-    * table (r18, verdict r17 #1): a corpus regenerated IN PLACE within a
-    * live session re-keys and REBUILDS the shingle/signature/cluster/
-    * truth artifacts instead of serving stale dedup keys or stale eval
-    * truth — the Pq.srcSignature staleness contract, applied to the
-    * documents-derived side (DedupSigSpec pins it end-to-end). */
-  private def docSig(dir: String): String =
-    Warehouse.srcSigSuffix(dir, "documents.parquet")
+  /** Every dedup artifact is keyed on documents.parquet's data signature
+    * (r18, verdict r17 #1): a corpus regenerated IN PLACE within a live
+    * session REBUILDS the shingle/signature/cluster/truth artifacts
+    * instead of serving stale dedup keys or stale eval truth
+    * (DedupSigSpec pins it end-to-end). */
+  private def docTable(spark: SparkSession, name: String, dir: String,
+                       layout: Artifact.Layout)(build: => DataFrame): DataFrame =
+    Artifact.table(spark, name, dir, "documents.parquet")(layout)(build)
 
   /** Exploded DISTINCT 60-bit-HASHED word n-gram shingles: one row per
     * (doc_id, hs), plus carried metadata columns.
@@ -81,15 +81,9 @@ object Dedup {
     * measured SLOWER than recompute locally (materialization cost + blocked
     * codegen fusion, see §6 notes); a written bucketed table is the shape a
     * real cluster uses, and the write amortizes across every consumer. */
-  private def shingleIndex3(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_sh3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeBucketed(
-          shingleHashRows(Tables.documents(spark, dir), 3, Nil), t, "doc_id")
-    }
-    spark.table(t)
-  }
+  private def shingleIndex3(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "sh3", dir, Artifact.Bucketed("doc_id"))(
+      shingleHashRows(Tables.documents(spark, dir), 3, Nil))
 
   /** C1: exact dedup — md5 hash groups with canonical (min) doc id. */
   def d1ExactDup(spark: SparkSession, dir: String): DataFrame =
@@ -138,14 +132,9 @@ object Dedup {
     * per-doc shingle counts all read it) — in production it is the stored
     * output of the signature-build pass, bucketed by doc_id so the
     * count-attach joins stay exchange-free. */
-  private def minhashSig(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_mhsig_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeBucketed(minhashSigFrom(shingleIndex3(spark, dir)), t, "doc_id")
-    }
-    spark.table(t)
-  }
+  private def minhashSig(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "mhsig", dir, Artifact.Bucketed("doc_id"))(
+      minhashSigFrom(shingleIndex3(spark, dir)))
 
   /** LSH band rows (doc_id, b, bh) — 4 bands x 4 rows over the 16 minima. */
   private def lshBands(sig: DataFrame): DataFrame =
@@ -269,20 +258,9 @@ object Dedup {
     * deliverable (d6/d8/p1/p5/p8f). Same staging-freshness contract as
     * [[d2MultipassPairs]]. */
   private[graft] def clusterTableMultipass(spark: SparkSession, dir: String,
-                                           passes: Int, staging: String): DataFrame = {
-    val t = s"graft_ccf_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val pairs = d2MultipassPairs(spark, dir, passes, staging)
-          .select("doc_a", "doc_b").persist()
-        Warehouse.writeBucketed(
-          connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-          t, "doc_id")
-        pairs.unpersist()
-      }
-    }
-    spark.table(t)
-  }
+                                           passes: Int, staging: String): DataFrame =
+    clusterArtifact(spark, "ccf", dir,
+      d2MultipassPairs(spark, dir, passes, staging))
 
   /** C6-FULL: d6's cluster report over the MULTIPASS full pair set —
     * byte-equal output to [[d6DupClusters]] (spec-pinned at sf0.01 via
@@ -328,25 +306,19 @@ object Dedup {
     * count-weighted per-distinct-word sum, so no (doc, word) pre-count
     * and, crucially, no 60x bit-explode shuffle (that shape moves 60x
     * the token count through the exchange at 100 TB). */
-  private def simhashSig(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_shsig_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val tok = Tables.documents(spark, dir)
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-          .withColumn("h", DetHash.h60(col("w")))
-        val bitAggs = (0 until 60).map { b =>
-          sum(expr(s"2 * ((h >> $b) & 1) - 1")).as(s"s$b")
-        }
-        val sig = tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-          .select(col("doc_id"),
-            (0 until 60).map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
-              .reduce(_ + _).as("sig"))
-        Warehouse.writeBucketed(sig, t, "doc_id")
+  private def simhashSig(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "shsig", dir, Artifact.Bucketed("doc_id")) {
+      val tok = Tables.documents(spark, dir)
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .withColumn("h", DetHash.h60(col("w")))
+      val bitAggs = (0 until 60).map { b =>
+        sum(expr(s"2 * ((h >> $b) & 1) - 1")).as(s"s$b")
       }
+      tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
+        .select(col("doc_id"),
+          (0 until 60).map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(0L))
+            .reduce(_ + _).as("sig"))
     }
-    spark.table(t)
-  }
 
   def d3Simhash(spark: SparkSession, dir: String): DataFrame =
     d3SimhashChunked(spark, dir, chunkCount = 4)
@@ -356,28 +328,22 @@ object Dedup {
     * 120 bit-sums as map-side partial aggregates in the SAME single
     * groupBy shape as [[simhashSig]] — the wide build costs one more
     * column pass, never a second shuffle. */
-  private def simhashSigWide(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_shsigw_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val tok = Tables.documents(spark, dir)
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-          .withColumn("h0", DetHash.h60(col("w")))
-          .withColumn("h1", DetHash.h60Seeded(lit(1), col("w")))
-        val bitAggs =
-          (0 until 60).map(b => sum(expr(s"2 * ((h0 >> $b) & 1) - 1")).as(s"a$b")) ++
-            (0 until 60).map(b => sum(expr(s"2 * ((h1 >> $b) & 1) - 1")).as(s"b$b"))
-        val sig = tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
-          .select(col("doc_id"),
-            (0 until 60).map(b => when(col(s"a$b") > 0, lit(1L << b)).otherwise(0L))
-              .reduce(_ + _).as("sig0"),
-            (0 until 60).map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(0L))
-              .reduce(_ + _).as("sig1"))
-        Warehouse.writeBucketed(sig, t, "doc_id")
-      }
+  private def simhashSigWide(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "shsigw", dir, Artifact.Bucketed("doc_id")) {
+      val tok = Tables.documents(spark, dir)
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+        .withColumn("h0", DetHash.h60(col("w")))
+        .withColumn("h1", DetHash.h60Seeded(lit(1), col("w")))
+      val bitAggs =
+        (0 until 60).map(b => sum(expr(s"2 * ((h0 >> $b) & 1) - 1")).as(s"a$b")) ++
+          (0 until 60).map(b => sum(expr(s"2 * ((h1 >> $b) & 1) - 1")).as(s"b$b"))
+      tok.groupBy("doc_id").agg(bitAggs.head, bitAggs.tail: _*)
+        .select(col("doc_id"),
+          (0 until 60).map(b => when(col(s"a$b") > 0, lit(1L << b)).otherwise(0L))
+            .reduce(_ + _).as("sig0"),
+          (0 until 60).map(b => when(col(s"b$b") > 0, lit(1L << b)).otherwise(0L))
+            .reduce(_ + _).as("sig1"))
     }
-    spark.table(t)
-  }
 
   /** C3b (d3w, r14): the WIDE SimHash the C3 scaladoc promised for the
     * regime where n^2/2^15 bucket pressure bites (~100 TB corpora) — a
@@ -484,16 +450,11 @@ object Dedup {
     // the 4-gram index feeds both self-join sides and the per-doc counts —
     // materialized once per (session, sf-dir) like the 3-gram index (the
     // explode+window chain otherwise executes 4x per query, per run)
-    val t4 = s"graft_sh4_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t4))
-        Warehouse.writeBucketed(
-          shingleHashRows(
-            Tables.documents(spark, dir)
-              .withColumn("len_bucket", (col("n_chars") / 200).cast("long")),
-            4, Seq("lang", "len_bucket")), t4, "doc_id")
-    }
-    val ex = spark.table(t4)
+    val ex = docTable(spark, "sh4", dir, Artifact.Bucketed("doc_id"))(
+      shingleHashRows(
+        Tables.documents(spark, dir)
+          .withColumn("len_bucket", (col("n_chars") / 200).cast("long")),
+        4, Seq("lang", "len_bucket")))
     val nsh = ex.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = ex.as("x").join(ex.as("y"),
         col("x.hs") === col("y.hs") && col("x.lang") === col("y.lang") &&
@@ -678,18 +639,23 @@ object Dedup {
     * artifact, so at warehouse scale it IS a written table, not a
     * per-query recompute. Same within-session immutable-input assumption
     * as [[shingleIndex3]]. */
-  private[graft] def clusterTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_cc_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val pairs = d2MinhashLsh(spark, dir).select("doc_a", "doc_b").persist()
-        Warehouse.writeBucketed(
-          connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-          t, "doc_id")
-        pairs.unpersist()
-      }
+  private[graft] def clusterTable(spark: SparkSession, dir: String): DataFrame =
+    clusterArtifact(spark, "cc", dir, d2MinhashLsh(spark, dir))
+
+  /** The (doc_id, cluster_id) connected-components artifact over a pair
+    * stream, shared by the full, sampled and multipass chains. The pairs
+    * are persisted across connectedComponents' iterations and released
+    * once the build has written. */
+  private def clusterArtifact(spark: SparkSession, name: String, dir: String,
+                              pairs: => DataFrame): DataFrame = {
+    var held: Option[DataFrame] = None
+    val t = docTable(spark, name, dir, Artifact.Bucketed("doc_id")) {
+      val p = pairs.select("doc_a", "doc_b").persist()
+      held = Some(p)
+      connectedComponents(p).select(col("doc_id"), col("lbl").as("cluster_id"))
     }
-    spark.table(t)
+    held.foreach(_.unpersist())
+    t
   }
 
   /** C6s/C8s shared artifact (r15, verdict r14 #3): the SAMPLED-chain
@@ -706,19 +672,8 @@ object Dedup {
     * is the difference between a verdict and a disk-bound exclusion: the
     * full pair stream's verify-join spill (>65 GB) was the wall, and the
     * sampled stream divides it by the sample rate. */
-  private[graft] def clusterTableSampled(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_ccs_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val pairs = d2sMinhashLshSampled(spark, dir).select("doc_a", "doc_b").persist()
-        Warehouse.writeBucketed(
-          connectedComponents(pairs).select(col("doc_id"), col("lbl").as("cluster_id")),
-          t, "doc_id")
-        pairs.unpersist()
-      }
-    }
-    spark.table(t)
-  }
+  private[graft] def clusterTableSampled(spark: SparkSession, dir: String): DataFrame =
+    clusterArtifact(spark, "ccs", dir, d2sMinhashLshSampled(spark, dir))
 
   /** C6s: d6's cluster report over the sampled-chain assignment. */
   def d6sDupClustersSampled(spark: SparkSession, dir: String): DataFrame = {
@@ -814,20 +769,14 @@ object Dedup {
     * probe both self/semi-join it on hs, so the bucketed layout makes
     * those joins exchange-free. One groupBy (df) + one semi join at build
     * time, amortized across consumers. */
-  private def rareShingleIndex(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_rare3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val ex = shingleIndex3(spark, dir)
-        Warehouse.writeBucketed(
-          ex.join(
-            ex.groupBy("hs").agg(count(lit(1)).as("df"))
-              .filter(col("df") <= D7DfCap).select("hs"),
-            Seq("hs"), "left_semi"), t, "hs")
-      }
+  private def rareShingleIndex(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "rare3", dir, Artifact.Bucketed("hs")) {
+      val ex = shingleIndex3(spark, dir)
+      ex.join(
+        ex.groupBy("hs").agg(count(lit(1)).as("df"))
+          .filter(col("df") <= D7DfCap).select("hs"),
+        Seq("hs"), "left_semi")
     }
-    spark.table(t)
-  }
 
   /** The exhaustive near-dup ground-truth pair set (Jaccard >= 0.5 over
     * the rare-shingle inverted index), materialized ONCE per (session,
@@ -836,26 +785,26 @@ object Dedup {
     * eval run. The inverted-index pair join (~sum(df^2) rows through one
     * exchange, df-capped) is the dominant build cost; the stored result
     * is just id pairs. */
-  private def truthPairs(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_truth3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val sig = minhashSig(spark, dir)
-        val nsh = sig.select(col("doc_id"), col("n"))
-        val rare = rareShingleIndex(spark, dir)
-        val inter = rare.as("x").join(rare.as("y"),
-            col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
-          .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("i"))
-        Warehouse.writeBucketed(
-          inter
-            .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-            .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-            .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
-            .select("doc_a", "doc_b"), t, "doc_a")
-      }
+  private def truthPairs(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "truth3", dir, Artifact.Bucketed("doc_a")) {
+      val rare = rareShingleIndex(spark, dir)
+      jaccardTruth(spark, dir, rare.as("x"), rare)
     }
-    spark.table(t)
+
+  /** Shingle-intersection pairs (x side `xs`, y side `rare`) kept at exact
+    * Jaccard >= 0.5 — the verify tail both truth sets share. */
+  private def jaccardTruth(spark: SparkSession, dir: String, xs: DataFrame,
+                           rare: DataFrame): DataFrame = {
+    val nsh = minhashSig(spark, dir).select(col("doc_id"), col("n"))
+    val inter = xs.join(rare.as("y"),
+        col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
+      .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("i"))
+    inter
+      .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
+      .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
+      .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
+      .select("doc_a", "doc_b")
   }
 
   /** The LSH candidate-pair set, materialized ONCE per (session, sf-dir)
@@ -867,15 +816,9 @@ object Dedup {
     * feed its two aggregate consumers. The d2 queries keep deriving
     * candidates inline — candidate GENERATION is the operator d2 grades;
     * candidate RECALL is what d7 grades, and it probes the stored set. */
-  private def candPairsTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_cand3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeBucketed(
-          lshCandidates(minhashSig(spark, dir)), t, "doc_a")
-    }
-    spark.table(t)
-  }
+  private def candPairsTable(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "cand3", dir, Artifact.Bucketed("doc_a"))(
+      lshCandidates(minhashSig(spark, dir)))
 
   def d7LshRecall(spark: SparkSession, dir: String): DataFrame = {
     val cand = candPairsTable(spark, dir)
@@ -916,31 +859,14 @@ object Dedup {
     * the full 5M-doc index at sf100d where the unsampled build is the
     * documented disk wall. Content == truthPairs WHERE doc_a % 101 = 0
     * (doc_a is the smaller id, exactly the sampled x side). */
-  private def truthPairsSampled(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_truth3s_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t)) {
-        val sig = minhashSig(spark, dir)
-        val nsh = sig.select(col("doc_id"), col("n"))
-        val rare = rareShingleIndex(spark, dir)
-        // sample filter on the bucketed index's x side only: the
-        // hs-bucketed self-join stays exchange-free, the pair stream
-        // shrinks 101x
-        val inter = rare.filter(col("doc_id") % 101 === 0).as("x")
-          .join(rare.as("y"),
-            col("x.hs") === col("y.hs") && col("x.doc_id") < col("y.doc_id"))
-          .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("i"))
-        Warehouse.writeBucketed(
-          inter
-            .join(nsh.select(col("doc_id").as("doc_a"), col("n").as("na")), "doc_a")
-            .join(nsh.select(col("doc_id").as("doc_b"), col("n").as("nb")), "doc_b")
-            .filter(Exact.ratio6e(col("i"), col("na") + col("nb") - col("i")) >= 500000L)
-            .select("doc_a", "doc_b"), t, "doc_a")
-      }
+  private def truthPairsSampled(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "truth3s", dir, Artifact.Bucketed("doc_a")) {
+      val rare = rareShingleIndex(spark, dir)
+      // sample filter on the bucketed index's x side only: the
+      // hs-bucketed self-join stays exchange-free, the pair stream
+      // shrinks 101x
+      jaccardTruth(spark, dir, rare.filter(col("doc_id") % 101 === 0).as("x"), rare)
     }
-    spark.table(t)
-  }
 
   def d7sLshRecallSampled(spark: SparkSession, dir: String): DataFrame = {
     // both sides stored assets (r17, see d7LshRecall): the sampled truth
@@ -1088,17 +1014,11 @@ object Dedup {
     * key set only (the single predicate all three consumers test), so it
     * is strictly smaller than the index; the bucketed-by-hs layout feeds
     * their hash joins without exchanging the artifact side. */
-  private def dupShingleTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_dup3_${Warehouse.tableSuffix(dir)}_${docSig(dir)}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        Warehouse.writeBucketed(
-          shingleIndex3(spark, dir)
-            .groupBy("hs").agg(count(lit(1)).as("df"))
-            .filter(col("df") >= 2).select("hs"), t, "hs")
-    }
-    spark.table(t)
-  }
+  private def dupShingleTable(spark: SparkSession, dir: String): DataFrame =
+    docTable(spark, "dup3", dir, Artifact.Bucketed("hs"))(
+      shingleIndex3(spark, dir)
+        .groupBy("hs").agg(count(lit(1)).as("df"))
+        .filter(col("df") >= 2).select("hs"))
 
   def d11DupTextFraction(spark: SparkSession, dir: String): DataFrame = {
     val ex = shingleIndex3(spark, dir)
@@ -1231,14 +1151,11 @@ object Dedup {
     * scrub (r17's chunking applied before d12), not a bigger buffer. */
   val D13MaxDocTokens = 4000000L
 
-  /** Measured max doc token count, memoized per (session, corpus) like
-    * every build artifact — the guard costs one narrow scan once. */
-  private val d13MaxCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
   def d13ScrubbedCorpus(spark: SparkSession, dir: String,
                         maxDocTokens: Long = D13MaxDocTokens): DataFrame = {
-    val worst = d13MaxCache.getOrElseUpdate(s"${Warehouse.tableSuffix(dir)}_${docSig(dir)}",
+    // measured max doc token count, an Artifact.memo like every build
+    // artifact — the guard costs one narrow scan per corpus version
+    val worst = Artifact.memo("d13max", dir, "documents.parquet")(
       Tables.documents(spark, dir)
         .agg(max(size(split(col("text"), " ")))).collect()(0).getInt(0).toLong)
     if (worst > maxDocTokens) throw new IllegalArgumentException(

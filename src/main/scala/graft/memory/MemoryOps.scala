@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.Artifact
 
 /** Memory engine (SURVEY.md §2.A) — key-value store with TTL expiration,
   * rebuilt as Spark batch analytics over the `events` write-ahead log.
@@ -42,18 +43,13 @@ object MemoryOps {
   val NowLit = "2024-01-31 00:00:00"
   private def now: Column = lit(NowLit).cast("timestamp")
 
-  /** Live memory table, materialized ONCE per (session, data-dir) as a
+  /** Live memory table, materialized ONCE per events version as a
     * warehouse table bucketed+sorted by memory_key. Every A-family query
     * reads this layout; only the first call (Bench's cold run) pays the
     * events-WAL upsert aggregation. */
-  def memoryTable(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_mem_${graft.sources.Warehouse.tableSuffix(dir)}_${graft.sources.Warehouse.srcSigSuffix(dir, "events.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writeBucketed(buildMemoryTable(spark, dir), t, "memory_key")
-    }
-    spark.table(t)
-  }
+  def memoryTable(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "mem", dir, "events.parquet")(Artifact.Bucketed("memory_key"))(
+      buildMemoryTable(spark, dir))
 
   /** The latest-wins upsert by key over the events WAL (the build side of
     * [[memoryTable]]). */

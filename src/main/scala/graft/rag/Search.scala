@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.Vec
+import graft.sources.Artifact
 
 /** Vector search (SURVEY.md §2.B3-B5, B8, §2.D1) — the reference's
   * `rag_search` / `find_similar_documents` / `compute_similarity` re-expressed
@@ -236,17 +237,10 @@ object Search {
     * artifact each of those queries re-scanned the full corpus; now only
     * the first call pays the brute-force pass, and the bucketed layout
     * feeds the per-query windows/joins downstream without an exchange. */
-  private[graft] def knnShortlist101(spark: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_knn101_${graft.sources.Warehouse.tableSuffix(dir)}_${graft.sources.Warehouse.srcSigSuffix(dir, "embeddings.parquet")}"
-    synchronized {
-      if (!spark.catalog.tableExists(t))
-        graft.sources.Warehouse.writeBucketed(
-          knn(spark, dir, col("vec_id") % 101 === 0, k = ShortlistK,
-            threshold = -1.0, clampZero = false, sameLabel = false),
-          t, "query_id")
-    }
-    spark.table(t)
-  }
+  private[graft] def knnShortlist101(spark: SparkSession, dir: String): DataFrame =
+    Artifact.table(spark, "knn101", dir, "embeddings.parquet")(Artifact.Bucketed("query_id"))(
+      knn(spark, dir, col("vec_id") % 101 === 0, k = ShortlistK,
+        threshold = -1.0, clampZero = false, sameLabel = false))
 
   /** Brute-force ground truth@10 for a `vec_id % qmod` query set, read
     * from the [[knnShortlist101]] artifact instead of re-scanning the

@@ -25,7 +25,7 @@ class BenchFpSpec extends AnyFunSuite {
   }
 
   test("scrubPlan drops the IVF list table's data-signature suffix") {
-    // the sig is md5 over file names+sizes+MTIMES (Pq.srcSignature) — the
+    // the sig is md5 over file names+sizes+MTIMES (Artifact.signature) — the
     // driver resets testdata mtimes every round, so two same-code rounds
     // print different suffixes for the same semantic plan (caught r13)
     val a = Bench.scrubPlan("FileScan parquet spark_catalog.default." +

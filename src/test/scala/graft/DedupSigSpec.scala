@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
-
+import graft.Regen.{bag, tempDir, writeDocs, writeVecs}
 import graft.dedup.Dedup
 
 /** In-place regeneration freshness for the DOCUMENTS- and EMBEDDINGS-
@@ -12,90 +10,49 @@ import graft.dedup.Dedup
   * (path) only, so a corpus regenerated IN PLACE within one live session
   * would serve stale dedup keys / stale recall truth with no error —
   * exactly the wrong-answer class PqSigSpec closed for the PQ tables in
-  * r17. Every artifact table now carries Warehouse.srcSigSuffix(dir,
-  * sources...) beside the path hash; this spec is the executable proof:
-  * build + serve at corpus v1, regenerate the SAME path with different
-  * content, and pin the in-place result row-identical to a never-cached
-  * fresh-directory compute of the identical v2 corpus.
+  * r17. Every artifact table is now an Artifact.table keyed on the data
+  * signature of its sources; this spec is the executable proof: build +
+  * serve at corpus v1, regenerate the SAME path with different content,
+  * and pin the in-place result row-identical (as an order-free multiset)
+  * to a never-cached fresh-directory compute of the identical v2 corpus.
   */
 class DedupSigSpec extends SparkSpec {
 
-  /** Tiny deterministic documents corpus; `version` changes which docs are
-    * near-duplicates, so every dedup artifact's content changes with it. */
-  private def writeDocs(dir: String, version: Int): Unit = {
-    import spark.implicits._
-    // per-doc-unique vocabulary: no cross-doc shingles except the copied
-    // doc below, so the dup structure IS the version's distinguishing fact
-    val base = (0 until 24).map { i =>
-      val words = (0 until 12).map(j => s"v${version}d${i}w$j")
-      (i.toLong, words.mkString(" "), "en", s"src${i % 3}", 60L)
-    }
-    // duplicate pairs shift with the version: v1 copies doc 0 -> 1,
-    // v2 copies doc 2 -> 3 (different dup groups, different truth sets)
-    val rows = base.map { case (id, text, lang, src, n) =>
-      if (version == 1 && id == 1L) (id, base(0)._2, lang, src, n)
-      else if (version == 2 && id == 3L) (id, base(2)._2, lang, src, n)
-      else (id, text, lang, src, n)
-    }
-    rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
-
-  /** PqSigSpec's deterministic embeddings corpus, seeded by version. */
-  private def writeVecs(dir: String, version: Int, n: Int = 300): Unit = {
-    val rnd = new java.util.Random(20260818L + version)
-    val dim = 32
-    def unit(): Array[Float] = {
-      val v = Array.fill(dim)(rnd.nextGaussian().toFloat)
-      val nrm = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
-      v.map(_ / nrm)
-    }
-    val rows = (0 until n).map(i => Row(i.toLong, unit().toSeq, i % 10))
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType, containsNull = false)),
-      StructField("label", IntegerType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-  }
-
-  private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
-
   test("in-place documents regeneration rebuilds the dedup artifact chain") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsig").toString
-    writeDocs(dir, version = 1)
+    val dir = tempDir("graft_dsig")
+    writeDocs(spark, dir, version = 1)
     // build + serve the chain at v1: d11 consumes sh3 + dup3; d7 consumes
     // mhsig -> rare3 -> truth3 + cand3 — between them the full
     // shingle/signature/truth/candidate artifact stack
-    val d11v1 = rowsOf(Dedup.d11DupTextFraction(spark, dir))
-    val d7v1 = rowsOf(Dedup.d7LshRecall(spark, dir))
+    val d11v1 = bag(Dedup.d11DupTextFraction(spark, dir))
+    val d7v1 = bag(Dedup.d7LshRecall(spark, dir))
     assert(d11v1.nonEmpty && d7v1.nonEmpty)
 
     // regenerate the SAME path with different duplicate structure
-    writeDocs(dir, version = 2)
-    val fresh = java.nio.file.Files.createTempDirectory("graft_dsig_f").toString
-    writeDocs(fresh, version = 2)
+    writeDocs(spark, dir, version = 2)
+    val fresh = tempDir("graft_dsig_f")
+    writeDocs(spark, fresh, version = 2)
 
-    val d11in = rowsOf(Dedup.d11DupTextFraction(spark, dir))
-    assert(d11in === rowsOf(Dedup.d11DupTextFraction(spark, fresh)),
+    val d11in = bag(Dedup.d11DupTextFraction(spark, dir))
+    assert(d11in === bag(Dedup.d11DupTextFraction(spark, fresh)),
       "d11 served a stale sh3/dup3 artifact after in-place regeneration")
     assert(d11in !== d11v1,
       "v2 regeneration produced the v1 answer — dup-key table not data-keyed")
-    assert(rowsOf(Dedup.d7LshRecall(spark, dir)) ===
-      rowsOf(Dedup.d7LshRecall(spark, fresh)),
+    assert(bag(Dedup.d7LshRecall(spark, dir)) ===
+      bag(Dedup.d7LshRecall(spark, fresh)),
       "d7 served stale candidate/truth artifacts after in-place regeneration")
   }
 
   test("in-place embeddings regeneration rebuilds the knn101 eval shortlist") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ksig").toString
-    writeVecs(dir, version = 1)
-    val v1 = rowsOf(graft.rag.Search.knnShortlist101(spark, dir))
+    val dir = tempDir("graft_ksig")
+    writeVecs(spark, dir, seed = 20260819L, dim = 32, n = 300)
+    val v1 = bag(graft.rag.Search.knnShortlist101(spark, dir))
     assert(v1.nonEmpty)
-    writeVecs(dir, version = 2)
-    val fresh = java.nio.file.Files.createTempDirectory("graft_ksig_f").toString
-    writeVecs(fresh, version = 2)
-    val inPlace = rowsOf(graft.rag.Search.knnShortlist101(spark, dir))
-    assert(inPlace === rowsOf(graft.rag.Search.knnShortlist101(spark, fresh)),
+    writeVecs(spark, dir, seed = 20260820L, dim = 32, n = 300)
+    val fresh = tempDir("graft_ksig_f")
+    writeVecs(spark, fresh, seed = 20260820L, dim = 32, n = 300)
+    val inPlace = bag(graft.rag.Search.knnShortlist101(spark, dir))
+    assert(inPlace === bag(graft.rag.Search.knnShortlist101(spark, fresh)),
       "knn101 served a stale shortlist after in-place regeneration — the " +
         "recall queries' stored ground truth would silently grade v1 truth")
     assert(inPlace !== v1,

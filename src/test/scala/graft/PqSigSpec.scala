@@ -1,10 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.ann.Pq
+import graft.Regen.{bag, tempDir}
+import graft.ann.{IvfPqR, KmeansIvf, Pq, Sq}
+import graft.sources.Artifact
 
 /** In-place regeneration freshness for the PQ artifact caches (r17,
   * verdict r16 #2): codesTable (pqcodes), the default-nlists ivfPqTable,
@@ -22,34 +22,16 @@ class PqSigSpec extends SparkSpec {
   /** RouterDimSpec's deterministic clustered-corpus construction: seeded
     * by dim only, so two writes of the same dim are content-identical —
     * which is exactly what lets the fresh-dir twin act as the oracle. */
-  private def writeCorpus(dir: String, dim: Int, n: Int, k: Int = 16): Unit = {
-    val rnd = new java.util.Random(20260816L + dim)
-    def unit(): Array[Float] = {
-      val v = Array.fill(dim)(rnd.nextGaussian().toFloat)
-      val nrm = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
-      v.map(_ / nrm)
-    }
-    val centers = Array.fill(k)(unit())
-    val rows = (0 until n).map { i =>
-      val c = centers(i % k)
-      val v = c.map(x =>
-        x + 0.35f * rnd.nextGaussian().toFloat / math.sqrt(dim).toFloat)
-      Row(i.toLong, v.toSeq, i % k % 10)
-    }
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType, containsNull = false)),
-      StructField("label", IntegerType, nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-  }
+  private def writeCorpus(dir: String, dim: Int, n: Int): Unit =
+    Regen.writeVecs(spark, dir, seed = 20260816L + dim, dim = dim, n = n)
 
   private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
 
   test("in-place dim regeneration serves fresh PQ artifacts, not cached-width tables") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pqsig").toString
     writeCorpus(dir, dim = 32, n = 600)
-    val sig32 = Pq.srcSignature(dir)
+    def sig = Artifact.signature(spark, dir, Seq("embeddings.parquet"))
+    val sig32 = sig
     assert(Pq.subDimOf(spark, dir) === 32 / Pq.M)
     // build + serve every cached artifact flavor at dim 32: pqcodes (a5),
     // default-nlists ivfPqTable (a13), and the composed a22 serving shape
@@ -59,7 +41,7 @@ class PqSigSpec extends SparkSpec {
 
     // regenerate the SAME path at dim 64 within the SAME session
     writeCorpus(dir, dim = 64, n = 600)
-    assert(Pq.srcSignature(dir) !== sig32,
+    assert(sig !== sig32,
       "regeneration must move the data signature or every cache aliases")
     assert(Pq.subDimOf(spark, dir) === 64 / Pq.M)
 
@@ -100,5 +82,28 @@ class PqSigSpec extends SparkSpec {
     assert(rowsOf(Pq.a9PqKmeansTopK(spark, dir)) ===
       rowsOf(Pq.a9PqKmeansTopK(spark, fresh)),
       "a9 served a stale-signature trained codebook or code table")
+  }
+
+  test("in-place regeneration rebuilds the SQ, residual-IVFPQ and k-means IVF tables") {
+    // sqstats/sqcodes (a12), ivfpqr (a16), ivfk/ivfkc + ivfpqrk (a4, a18)
+    // were keyed by path only: a regenerated corpus was probed through v1
+    // codes, statistics and centroids. v2 differs in seed AND size, so the
+    // query set itself moves and no result can coincide with v1's.
+    val serve = Seq[(String, String => DataFrame)](
+      "a12" -> (d => Sq.a12SqRecall(spark, d)),
+      "a16" -> (d => IvfPqR.a16IvfPqResidualTopK(spark, d)),
+      "a18" -> (d => IvfPqR.a18IvfPqrKmeansTopK(spark, d)),
+      "a4" -> (d => KmeansIvf.a4KnnIvfKmeans(spark, d)))
+    val dir = tempDir("graft_pqsig_sq")
+    Regen.writeVecs(spark, dir, seed = 31L, dim = 32, n = 600)
+    val v1 = serve.map { case (q, f) => q -> bag(f(dir)) }.toMap
+    Regen.writeVecs(spark, dir, seed = 32L, dim = 32, n = 505)
+    val fresh = tempDir("graft_pqsig_sqf")
+    Regen.writeVecs(spark, fresh, seed = 32L, dim = 32, n = 505)
+    serve.foreach { case (q, f) =>
+      val inPlace = bag(f(dir))
+      assert(inPlace === bag(f(fresh)), s"$q served a stale artifact after in-place regeneration")
+      assert(inPlace !== v1(q), s"$q: v2 regeneration produced the v1 answer")
+    }
   }
 }
